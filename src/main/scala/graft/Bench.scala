@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query wall times at
   * `SPARK_GRAFT_SF_DIR`.
@@ -41,34 +41,33 @@ object Bench {
     "text_zipf", "attr_markov", "profile_histograms", "profile_equidepth",
     "pack_next_fit")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_ONLY=headline restricts to the headline set (the sf1
-    // scale run, where the full registry would measure VM contention
-    // more than plans); any other value is a comma-separated explicit
-    // query list (the sf10 run benches only the scale-critical subset)
+  /** The registry slice a main runs (`SPARK_GRAFT_ONLY` in Bench,
+    * ShuffleAudit and MatCheck), in sorted name order: everything when
+    * unset, the [[headline]] set for `headline` (the sf1 scale run,
+    * where the full registry would measure VM contention more than
+    * plans), else a comma-separated explicit list (the sf10 run benches
+    * only the scale-critical subset). A misspelled or stale name fails
+    * HERE, loudly: silently filtering to fewer (or zero) queries would
+    * still overwrite a committed artifact with an empty/partial one. */
+  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered = sys.env.get("SPARK_GRAFT_ONLY") match {
+    only match {
       case Some("headline") => all.filter(q => headline.contains(q._1))
-      case Some(list)       =>
+      case Some(list) =>
         val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        // a misspelled or stale name must fail HERE, loudly: silently
-        // filtering to fewer (or zero) queries would still overwrite
-        // BENCH_FULL.json with an empty/partial committed artifact
         val unknown = names -- all.map(_._1).toSet
         require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names nothing")
+          s"query names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+        require(names.nonEmpty, "the query list is set but names nothing")
         all.filter(q => names(q._1))
-      case None             => all
+      case None => all
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val ordered = select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = EngineConf.session()
     // COLD pass: warms the session (codegen compiler, parquet footer
     // cache, JIT) and materializes every cache/memo a query registers.
     // Timed per-query so the cost the memos absorb stays attributable:
@@ -84,7 +83,7 @@ object Bench {
     // the action is BenchAction.consume, never count(): count() lets
     // Catalyst prune every unreferenced column, benching projections
     // as parquet row counts and hiding per-row errors (r8 verdict)
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) = {
+    def timed(name: String, fn: (SparkSession, String) => DataFrame) = {
       val t0 = System.nanoTime()
       try { BenchAction.consume(fn(spark, sfDir)) }
       catch { case _: Throwable => failed += name }

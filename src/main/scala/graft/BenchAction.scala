@@ -43,10 +43,15 @@ object BenchAction {
       }
     }
 
-  def consume(df: DataFrame): (Long, Long) = {
-    val cols = canonical(df)
-    val row = df.select(count(lit(1)).as("n"),
-      sum(hash(cols: _*).cast("long")).as("h")).collect()(0)
+  /** The action's plan over `df`: one row of (row count, checksum).
+    * [[RunOne]] runs it directly to read the executed plan's phases. */
+  def plan(df: DataFrame): DataFrame =
+    df.select(count(lit(1)).as("n"), sum(hash(canonical(df): _*).cast("long")).as("h"))
+
+  def run(action: DataFrame): (Long, Long) = {
+    val row = action.collect()(0)
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
+
+  def consume(df: DataFrame): (Long, Long) = run(plan(df))
 }

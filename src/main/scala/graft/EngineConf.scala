@@ -1,9 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Session settings shared by every driver-contract main (r15
-  * optimization round) so Bench/Verify/MatCheck/RunOne/Plans all run
-  * the engine the same way the test harness does:
+/** The one place an engine session is built. Every main and the spec
+  * harness go through [[session]], so Bench, the specs, the streaming
+  * SLA run and the scale tools all measure the same engine:
   *
   *   - `spark.sql.extensions = graft.plans.GraftExtensions` — the
   *     documented production wiring for graft's Catalyst surface
@@ -12,19 +12,17 @@ import org.apache.spark.sql.SparkSession
   *     duplicate window aggregates engine-wide).
   *   - `spark.sql.codegen.cache.maxEntries` — Spark's generated-class
   *     cache holds 100 entries by default, sized for a handful of
-  *     long-running queries. This engine's registry is 267 queries ×
+  *     long-running queries. This engine's registry is 268 queries ×
   *     several codegen units each, so a full sweep evicts everything
   *     and every re-execution pays full janino compilation again
   *     (measured: warm per-query times ≈ cold). 4096 entries keeps one
   *     sweep resident. JVM-level and scale-independent — the same
-  *     registry compiles the same classes on a 1000-node cluster; the
-  *     env knob exists for memory-constrained drivers.
+  *     registry compiles the same classes on a 1000-node cluster.
   */
 object EngineConf {
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // the codegen-stage id is embedded in the generated CLASS NAME
       // purely as a debugging aid; under AQE the id reflects runtime
       // replanning order, so two executions of the SAME multi-stage
@@ -33,4 +31,24 @@ object EngineConf {
       // on every warm run). Dropping the id makes generated source a
       // pure function of the subplan, so the cache can do its job.
       .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** A main's session: `SPARK_GRAFT_CPUS` local cores (default: every
+    * core the JVM sees), one shuffle partition per core. */
+  def session(): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    session(cores, cores)
+  }
+
+  /** A [[tune]]d session at `local[cores]`, UTC, no UI, WARN logging. */
+  def session(cores: Int, shufflePartitions: Int): SparkSession = {
+    val s = tune(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

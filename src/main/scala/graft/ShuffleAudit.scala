@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle/IO telemetry main: one JSON file with per-query BYTE costs
   * (shuffle read/write, spill, input scan, executor task time) at
@@ -40,7 +39,13 @@ import org.apache.spark.sql.SparkSession
   */
 object ShuffleAudit {
 
-  /** Accumulates stage-level task metrics; `delta` brackets a query. */
+  /** One completed stage: task count, submit-to-complete wall and
+    * summed task time — wall ≈ task time means the stage ran without
+    * parallelism (the single-task hot stage). */
+  final case class Stage(name: String, tasks: Int, wallMs: Long, taskTimeMs: Long)
+
+  /** Accumulates stage-level task metrics; two [[MetricsListener.quiesce]]
+    * snapshots bracket a query. */
   final class MetricsListener extends SparkListener {
     private val jobsStarted = new AtomicLong
     private val jobsEnded = new AtomicLong
@@ -54,13 +59,15 @@ object ShuffleAudit {
     private var inputRead = 0L
     private var taskTimeMs = 0L
     private var peakMemSum = 0L
-    private var stages = 0L
+    private var tasks = 0L
+    private val stageLog = scala.collection.mutable.ArrayBuffer.empty[Stage]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = { jobsStarted.incrementAndGet(); () }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = { jobsEnded.incrementAndGet(); () }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
+      val si = e.stageInfo
+      val m = si.taskMetrics
       if (m != null) lock.synchronized {
         shuffleRead += m.shuffleReadMetrics.totalBytesRead
         shuffleWrite += m.shuffleWriteMetrics.bytesWritten
@@ -69,17 +76,24 @@ object ShuffleAudit {
         inputRead += m.inputMetrics.bytesRead
         taskTimeMs += m.executorRunTime
         peakMemSum += m.peakExecutionMemory
-        stages += 1
+        tasks += si.numTasks
+        val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L)
+        stageLog += Stage(si.name, si.numTasks, wall, m.executorRunTime)
       }
     }
 
     final case class Snap(shuffleRead: Long, shuffleWrite: Long, spillMem: Long,
         spillDisk: Long, inputRead: Long, taskTimeMs: Long, peakMemSum: Long,
-        stages: Long, jobs: Long)
+        stages: Long, tasks: Long, jobs: Long)
 
     def snapshot(): Snap = lock.synchronized {
       Snap(shuffleRead, shuffleWrite, spillMem, spillDisk, inputRead,
-        taskTimeMs, peakMemSum, stages, jobsEnded.get)
+        taskTimeMs, peakMemSum, stageLog.size.toLong, tasks, jobsEnded.get)
+    }
+
+    /** The stages completed between two snapshots. */
+    def stagesBetween(from: Snap, to: Snap): Seq[Stage] = lock.synchronized {
+      stageLog.slice(from.stages.toInt, to.stages.toInt).toSeq
     }
 
     /** Waits until all submitted jobs' end events have been delivered
@@ -106,28 +120,10 @@ object ShuffleAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val ordered = Bench.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = EngineConf.session()
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
-
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some("headline") => all.filter(q => Bench.headline.contains(q._1))
-      case Some(list) =>
-        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = names -- all.map(_._1).toSet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names nothing")
-        all.filter(q => names(q._1))
-      case None => all
-    }
 
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     // cold pass: materialize every shared memo so measured deltas are

@@ -897,8 +897,8 @@ object Dedup {
     // on the join key pins the co-partitioned df build and join at
     // cluster width (the r15 negative result spread the MEMO itself,
     // which regressed its many light consumers; this is local).
-    val s = shingleReps(spark, dir)
-      .repartition(graft.util.Spread.width(shingleReps(spark, dir)), col("s"))
+    val base = shingleReps(spark, dir)
+    val s = base.repartition(graft.util.Spread.width(base), col("s"))
     // df is shingle-vocab-sized and distinct shingles grow ~linearly
     // with the corpus (unlike a word vocab, 5-gram shingles never
     // saturate) — a broadcast hint here is the bigram-table OOM failure

@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Writes the nested two-level-IVF parity fixture: n deterministic
@@ -20,13 +19,7 @@ object GenIvf2Fixture {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val n = if (args.length > 1) args(1).toLong else 5000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.EngineConf.session()
     // distributed generation: spark.range scales to any n without the
     // driver materializing the corpus (same values as the previous
     // driver-side tabulate — SIN is java.lang.Math.sin on both paths)

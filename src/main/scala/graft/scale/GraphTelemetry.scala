@@ -11,8 +11,8 @@ package graft.scale
   * shortcut making propagation linear in diameter) was invisible until
   * it hit the round cap.
   *
-  * In-memory and process-local by design (the bench/scale mains read it
-  * after a run and write the table into SCALE.md; production would lift
+  * In-memory and process-local by design (`graft.RunOne` reads it
+  * after each run, and SCALE.md carries its tables; production would lift
   * the same records into Spark listener events or metrics). Buffers are
   * bounded by round caps (≤ 50 per loop run), and [[clear]] +
   * [[snapshot]] bracket a measured query. */

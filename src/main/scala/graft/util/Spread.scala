@@ -19,17 +19,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     capped. On the fixture inputs the estimate is tiny, so the local
   *     width stays `defaultParallelism` and bench numbers remain
   *     comparable round-over-round; on a corpus-sized input the width
-  *     follows bytes (~128 MB/partition, `SPARK_GRAFT_SPREAD_TARGET_
-  *     BYTES` overrides for cluster tuning).
+  *     follows bytes (~128 MB/partition).
   *   - [[ifNarrow]]: apply the spread ONLY when the frame's current
   *     partitioning under-fills the cluster — the bootstrap_ci gate
   *     (r15), now shared: a 100 TB scan is already thousands of tasks
   *     and must never pay a fact-table shuffle for "parallelism".
   */
 object Spread {
-  private def targetBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_TARGET_BYTES").map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
+  /** Bytes per explicit partition — Spark's own scan split size. */
+  private val targetBytes: Long = 128L * 1024 * 1024
 
   /** Explicit partition count for a repartition of `df`: the cluster
     * width as a floor (spread small CPU-dense frames across all cores),
@@ -44,7 +42,14 @@ object Spread {
     * shuffle of 50k rows). For those shapes the width follows the SUM
     * of the leaf estimates — the real bytes entering the pipeline —
     * which still grows with corpus size at 100 TB but cannot be
-    * inflated by join-cardinality guesses. */
+    * inflated by join-cardinality guesses.
+    *
+    * The 4,096 cap applies to EVERY caller, not only the join/explode
+    * shapes whose bad estimates motivated it: it is a deliberate ceiling
+    * on any one explicit exchange (4,096 × 128 MB = 512 GB per shuffle
+    * before partitions grow past the target). A larger input still
+    * runs, with bigger partitions. `maxParts` is the seam SpreadSpec
+    * tests the cap through. */
   def width(df: DataFrame, maxParts: Int = 4096): Int = {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, Generate}
     val para = df.sparkSession.sparkContext.defaultParallelism

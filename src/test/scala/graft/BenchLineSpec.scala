@@ -22,6 +22,14 @@ class BenchLineSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"headline names not in queries: $missing")
   }
 
+  test("the query selector picks the headline set and rejects unknown or empty lists") {
+    assert(Bench.select(Some("headline")).map(_._1) === Bench.headline.sorted)
+    assert(Bench.select(None).size === SparkEntry.queries.size)
+    assert(Bench.select(Some(" w4_ema,q1_agg")).map(_._1) === Seq("q1_agg", "w4_ema"))
+    intercept[IllegalArgumentException](Bench.select(Some("q1_agg,no_such_query")))
+    intercept[IllegalArgumentException](Bench.select(Some(" , ")))
+  }
+
   test("bench action is pruning-proof: count() blesses a broken column, consume must fire it") {
     val spark = SparkSpec.session
     // `10 div (id-1)` throws ANSI DIVIDE_BY_ZERO at id = 1 — but only if

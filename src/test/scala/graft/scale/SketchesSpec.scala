@@ -20,4 +20,21 @@ class SketchesSpec extends SparkSpec {
         s"'$s': est $est exceeds exact $exact + eps*N $slack on the fixed seed/fixture")
     }
   }
+
+  test("approx distinct keeps a type whose values are all null, with n_exact 0") {
+    val dir = graft.util.Scratch.register(
+      java.nio.file.Files.createTempDirectory("sk_allnull").toString)
+    import spark.implicits._
+    Seq((1L, 1723500000000000L, "view", Some(1.5)),
+      (2L, 1723500000000001L, "view", Some(2.5)),
+      (3L, 1723500000000002L, "view", None),
+      (4L, 1723500000000003L, "refund", None),
+      (5L, 1723500000000004L, "refund", None))
+      .toDF("user_id", "us", "event_type", "value")
+      .selectExpr("user_id", "timestamp_micros(us) AS ts", "event_type", "value")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val got = Sketches.skApproxDistinct(spark, dir)
+      .as[(String, Long, Boolean)].collect().sortBy(_._1).toSeq
+    assert(got === Seq(("refund", 0L, true), ("view", 2L, true)))
+  }
 }
