@@ -462,18 +462,6 @@ object Dedup {
        |      len(list_distinct(list_concat(a.ts, b.ts))) >= 0.5""".stripMargin
 
   // ---------------------------------------------------------------- embedding
-  /** Corpus with double vectors + norms, shared by both embedding-dedup
-    * variants. Cached: without the materialization boundary,
-    * CollapseProject inlines the `transform` cast into all 64
-    * `element_at` sites of every pair's dot product (the [[shingleRows]]
-    * trap — measured 20 s vs 2 s at sf0.1), and the cache is 520 bytes a
-    * row — the in-memory vector index any similarity engine keeps. */
-  private def embCorpus(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), Similarity.vecDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-      .cache()
-
   /** Embedding near-dup pairs, EXACT semantics: cosine ≥ 0.4 over all
     * pairs.
     *
@@ -564,7 +552,7 @@ object Dedup {
     * oracle mirrors the deterministic banding bit-for-bit, so the check
     * is exact regardless of recall. */
   def embeddingLshPairs(spark: SparkSession, dir: String): DataFrame = {
-    val e = embCorpus(spark, dir)
+    val e = Similarity.corpus(spark, dir)
     // one typed pass computes all 32 plane dots per vector and emits its
     // 16 (band, value) rows — as an unrolled column expression the same
     // 2048-term projection falls out of codegen and runs interpreted at
@@ -579,7 +567,7 @@ object Dedup {
     // A pair sharing k bands is verified k times — 64 multiply-adds per
     // extra hit, orders of magnitude cheaper than the avoided exchanges.
     import spark.implicits._
-    // the schedule reads the corpus size once (embCorpus is cached)
+    // the schedule reads the corpus size once (the corpus is cached)
     val (bits, bands) = lshSchedule(e.count())
     // slice the plane matrix to the bands×bits rows the schedule uses
     // BEFORE the closure captures it: the full 1024×64 table is ~512 KB

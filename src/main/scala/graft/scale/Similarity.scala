@@ -97,7 +97,7 @@ object Similarity {
     * even over the cached [[corpus]] each `.count()` is a whole Spark
     * job — one per query invocation added up across the ANN family.
     * n is a property of the immutable test dir, so pay it once. */
-  private val corpusCountCache =
+  private[scale] val corpusCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[scale] def corpusCount(spark: SparkSession, dir: String): Long =
     corpusCountCache.computeIfAbsent(dir, d => corpus(spark, d).count())
@@ -122,13 +122,19 @@ object Similarity {
     * vector index): every ANN query reads it at least twice, and the
     * materialization boundary stops CollapseProject from inlining the
     * cast-`transform` into each of the 64 `element_at` sites of every
-    * unrolled dot product. */
+    * unrolled dot product. One frame per (session, dir) through
+    * [[DirMemo]], behind the [[StoredIndex.fingerprint]] check that
+    * drops it when the embeddings under `dir` are regenerated; cached
+    * again when a `clearCache()` dropped its blocks. */
   private[scale] def corpus(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark) // graft_dot for every ANN query
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-      .cache()
+    StoredIndex.fingerprint(spark, dir)
+    val c = DirMemo.getOrCompute(spark, "ann_corpus", dir)(
+      Tables.embeddings(spark, dir)
+        .select(col("vec_id"), vecDouble(col("embedding")).as("v"))
+        .withColumn("nrm", norm(col("v"))))
+    if (c.storageLevel == org.apache.spark.storage.StorageLevel.NONE) c.cache()
+    c
   }
 
   // ---------------------------------------------------------------- brute force
@@ -448,11 +454,7 @@ object Similarity {
     val c = corpus(spark, dir)
     val cents = c.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
+    val dist = sqDist("v", "cv")
     // argmin as a HASH AGGREGATE, not a rank-1 window: min over the
     // packed (dist, cid) value ([[packArgmin]]) is exactly ORDER BY
     // dist, cid LIMIT 1 per vector, partial-aggregates map-side (k
@@ -688,7 +690,7 @@ object Similarity {
     * scan ([[ivf2Route]]) and the quantized one ([[annIvfSqSearch]]). */
   private[scale] def ivf2Probes(c: DataFrame, supers: DataFrame,
       groups: DataFrame): DataFrame = {
-    val q = c.filter(col("vec_id") < annQueryCount)
+    val q = c.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     // query -> super routing: k1 dots per query, keep the 2 nearest
     val qsup = q.join(broadcast(supers), lit(true))
@@ -724,37 +726,19 @@ object Similarity {
     * `SparkEntry.benchImpls`), i.e. the steady-state query cost the
     * annIvf2Search scaladoc's production note promises. */
   def annIvf2Serve(spark: SparkSession, dir: String): DataFrame = {
-    ivf2ServeBuild(spark, dir)
+    ivf2Stored(spark, dir, rebuild = true)
     ivf2ServeRead(spark, dir)
   }
 
-  /** The routing-index build write: supers, groups, and the (vec_id,
-    * cid) assignment, then the completion marker. */
-  private def ivf2ServeBuild(spark: SparkSession, dir: String): Unit = {
-    val tmp = ivf2ServePath(dir)
-    ivf2ServeMarker(tmp).delete() // invalidate before touching any table
-    val idx = ivf2Index(spark, dir)
-    idx.supers.write.mode("overwrite").parquet(s"$tmp/supers")
-    idx.groups.write.mode("overwrite").parquet(s"$tmp/groups")
-    // r16: `d` rides along so the delete rows can STAGE from the
-    // stored table instead of recomputing the n×k1 assignment per row
-    // ([[ivf2DeleteStage]]); the serve readers' explicit (vec_id, cid)
-    // schemas column-prune it, so their scans read the same bytes
-    idx.assigned.select(col("vec_id"), col("cid"), col("d"))
-      .write.mode("overwrite").parquet(s"$tmp/assigned")
-    ivf2ServeMarker(tmp).createNewFile() // all three tables are down
-  }
-
-  /** The three routing tables read back from the stored index,
-    * building it first on a fresh JVM — shared by [[ivf2ServeRead]]
-    * and [[ivfSqServeRead]]. */
-  private def ivf2StoredIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val tmp = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(tmp).exists()) ivf2ServeBuild(spark, dir)
-    (spark.read.schema("sid BIGINT, sv ARRAY<DOUBLE>").parquet(s"$tmp/supers"),
-      spark.read.schema("cid BIGINT, cv ARRAY<DOUBLE>, sid BIGINT").parquet(s"$tmp/groups"),
-      spark.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$tmp/assigned"))
-  }
+  /** The stored routing index of `dir`'s corpus (supers, groups,
+    * assigned with `d`), built behind [[StoredIndex.ensure]]'s marker
+    * once per corpus fingerprint — the tables the serve, append,
+    * delete, recall and streaming rows read instead of recomputing the
+    * n×k1 assignment. `rebuild` forces the build the serve rows time. */
+  private[scale] def ivf2Stored(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): (DataFrame, DataFrame, DataFrame) =
+    StoredIndex.readRouting(spark, StoredIndex.ensure(spark, dir, ivf2ServePath(dir),
+      rebuild)(StoredIndex.writeRouting(ivf2Index(spark, dir), _)))
 
   /** TWO-LEVEL IVF, incremental ingest: the assignment table is
     * APPEND-ONLY, so adding a batch of vectors to a built index costs
@@ -779,27 +763,18 @@ object Similarity {
 
   /** The append-table WRITE staged by [[annIvf2Append]] (day-0
     * overwrite job + batch append job), factored out so the
-    * compaction operator can build the same small-file input. */
+    * compaction operator can build the same small-file input. Day-0 is
+    * BY DEFINITION a built index — its rows come from the stored table
+    * ([[ivf2Stored]]) instead of re-routing 90% of the corpus per run.
+    * Bit-identical by this row's own argument: each vector routes
+    * independently and the batch excludes vec_id < k, so the full
+    * assignment's prefix IS the day-0 assignment. The BATCH stays
+    * routed in-plan — the incremental cost this row exists to measure. */
   private def ivf2AppendWrite(spark: SparkSession, dir: String): String = {
-    val tmp = graft.util.Scratch.path("ivf2append", dir)
-    val idx = ivf2Index(spark, dir)
-    val cut = lit(corpusCount(spark, dir) * 9L / 10L)
-    val full = idx.assigned.select(col("vec_id"), col("cid"), col("d"))
-    // r16: day-0 is BY DEFINITION a built index — stage its rows from
-    // the stored serve table (one markered build per session) instead
-    // of re-routing 90% of the corpus per run. Bit-identical by this
-    // row's own argument: each vector routes independently and the
-    // batch excludes vec_id < k, so the full assignment's prefix IS
-    // the day-0 assignment. The BATCH stays routed in-plan — the
-    // incremental cost this row exists to measure.
-    val serve = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(serve).exists()) ivf2ServeBuild(spark, dir)
-    spark.read.schema(ivf2AssignSchema).parquet(s"$serve/assigned")
-      .filter(col("vec_id") < cut)
-      .write.mode("overwrite").parquet(tmp)        // day-0 build
-    full.filter(col("vec_id") >= cut)
-      .write.mode("append").parquet(tmp)           // the batch: append-only
-    tmp
+    val tmp = StoredIndex.writeDay0(spark, dir, ivf2Stored(spark, dir)._3,
+      graft.util.Scratch.path("ivf2append", dir))
+    StoredIndex.appendBatch(spark, dir,
+      ivf2Index(spark, dir).assigned.select(col("vec_id"), col("cid"), col("d")), tmp)
   }
 
   /** Oracle-shaped read-back of a stored assignment table. */
@@ -855,7 +830,7 @@ object Similarity {
   def annIvf2Staleness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = corpusCount(spark, dir)
-    val n0 = n * 9L / 10L            // the day-0 build annIvf2Append stages
+    val n0 = StoredIndex.appendCut(spark, dir) // the day-0 build annIvf2Append stages
     val kBuilt = ivfSchedule(n0).toLong
     val cap = 256L * kBuilt
     Seq(
@@ -881,8 +856,9 @@ object Similarity {
   // ------------------------------------------------------------- rebuild
   /** Root dir of the GENERATIONED serve index [[annIvf2Rebuild]]
     * maintains: `$root/gen-<g>/{supers,groups,assigned}` per
-    * generation, each behind its own completion marker, with the live
-    * generation named by the `_GRAFT_CURRENT` pointer file. */
+    * generation, each behind its own [[StoredIndex]] completion marker,
+    * with the live generation named by the `_GRAFT_CURRENT` pointer
+    * file. */
   private[scale] def ivf2RebuildPath(dir: String): String =
     graft.util.Scratch.path("ivf2rebuild", dir)
 
@@ -899,30 +875,23 @@ object Similarity {
   }
 
   /** Build ONE generation aside: train the two-level index over the
-    * given corpus slice at ITS OWN schedule, land the three tables
-    * under `$root/$gen`, then the completion marker. Nothing here
-    * touches the live generation — readers keep serving it. */
-  private[scale] def ivf2RebuildAside(spark: SparkSession, root: String,
-      gen: String, c: DataFrame, n: Long): Unit = {
-    val base = s"$root/$gen"
-    val marker = new java.io.File(s"$base/_GRAFT_INDEX_COMPLETE")
-    marker.delete()
-    val idx = ivf2IndexOver(c, n)
-    idx.supers.write.mode("overwrite").parquet(s"$base/supers")
-    idx.groups.write.mode("overwrite").parquet(s"$base/groups")
-    idx.assigned.select(col("vec_id"), col("cid"))
-      .write.mode("overwrite").parquet(s"$base/assigned")
-    marker.createNewFile()
-  }
+    * given slice of `dir`'s corpus at ITS OWN schedule and land it
+    * under `$root/$gen`. Nothing here touches the live generation —
+    * readers keep serving it. */
+  private[scale] def ivf2RebuildAside(spark: SparkSession, dir: String, root: String,
+      gen: String, c: DataFrame, n: Long): Unit =
+    StoredIndex.ensure(spark, dir, s"$root/$gen", rebuild = true)(
+      StoredIndex.writeRouting(ivf2IndexOver(c, n), _))
 
-  /** The CUTOVER: flip the pointer to a completed generation with an
-    * atomic rename (tmp write + ATOMIC_MOVE), so a reader sees either
-    * the old pointer or the new — never a partial one. The old
-    * generation's tables stay on disk (in-flight readers finish
-    * against them; reclaim is a later sweep), which is the
+  /** The CUTOVER: flip the pointer to a generation complete for the
+    * current corpus with an atomic rename (tmp write + ATOMIC_MOVE), so
+    * a reader sees either the old pointer or the new — never a partial
+    * one. The old generation's tables stay on disk (in-flight readers
+    * finish against them; reclaim is a later sweep), which is the
     * two-phase swap every online index rebuild runs. */
-  private[scale] def ivf2RebuildCutover(root: String, gen: String): Unit = {
-    require(new java.io.File(s"$root/$gen/_GRAFT_INDEX_COMPLETE").exists(),
+  private[scale] def ivf2RebuildCutover(spark: SparkSession, dir: String, root: String,
+      gen: String): Unit = {
+    require(StoredIndex.current(spark, dir, s"$root/$gen"),
       s"cutover to incomplete generation $gen at $root")
     val tmp = java.nio.file.Paths.get(s"$root/_GRAFT_CURRENT.tmp")
     java.nio.file.Files.write(tmp, gen.getBytes("UTF-8"))
@@ -938,13 +907,10 @@ object Similarity {
       root: String): DataFrame = {
     val gen = ivf2CurrentGen(root).getOrElse(
       sys.error(s"no live generation at $root"))
-    val base = s"$root/$gen"
-    require(new java.io.File(s"$base/_GRAFT_INDEX_COMPLETE").exists(),
+    require(StoredIndex.current(spark, dir, s"$root/$gen"),
       s"live generation $gen incomplete at $root")
-    top3(ivf2Route(corpus(spark, dir),
-      spark.read.schema("sid BIGINT, sv ARRAY<DOUBLE>").parquet(s"$base/supers"),
-      spark.read.schema("cid BIGINT, cv ARRAY<DOUBLE>, sid BIGINT").parquet(s"$base/groups"),
-      spark.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$base/assigned")))
+    val (supers, groups, assigned) = StoredIndex.readRouting(spark, s"$root/$gen")
+    top3(ivf2Route(corpus(spark, dir), supers, groups, assigned))
   }
 
   /** INDEX REBUILD — the retrain-and-swap executor for the
@@ -970,225 +936,28 @@ object Similarity {
     val c = corpus(spark, dir)
     val n = corpusCount(spark, dir)
     if (ivf2CurrentGen(root).isEmpty) { // day-0: the soon-stale build
-      ivf2RebuildAside(spark, root, "gen-0", c.filter(col("vec_id") < n / 10L), n / 10L)
-      ivf2RebuildCutover(root, "gen-0")
+      ivf2RebuildAside(spark, dir, root, "gen-0", c.filter(col("vec_id") < n / 10L), n / 10L)
+      ivf2RebuildCutover(spark, dir, root, "gen-0")
     }
-    ivf2RebuildAside(spark, root, "gen-1", c, n) // retrain at grown n
-    ivf2RebuildCutover(root, "gen-1")            // atomic flip
+    ivf2RebuildAside(spark, dir, root, "gen-1", c, n) // retrain at grown n
+    ivf2RebuildCutover(spark, dir, root, "gen-1")     // atomic flip
     ivf2GenServeRead(spark, dir, root)
   }
 
-  /** The staged table [[annIvf2Delete]] mutates: the full two-level
-    * assignment, RANGE-CLUSTERED on vec_id into a fixed 8 files. The
-    * clustering is the point — a delete predicate on the cluster key
-    * touches a contiguous file subset, which is what makes copy-on-
-    * write DELETE affordable at scale (an unclustered table makes
-    * every file dirty and COW degenerates to a full rewrite; the same
-    * reason Delta/Iceberg pair DELETE with Z-order/clustering). The
-    * fixture stages 8 files; a production table sizes file count from
-    * bytes like [[annIvf2Compact]] does. */
-  private[scale] def ivf2DeleteStage(spark: SparkSession, dir: String,
-      tag: String = "ivf2del"): String = {
-    val tmp = graft.util.Scratch.path(tag, dir)
-    // r16: stage FROM the stored serve index (built once per session
-    // behind its completion marker — the table a deployment's delete
-    // actually mutates) instead of recomputing the n×k1 assignment
-    // argmins per delete row. The stored rows ARE ivf2Index().assigned
-    // (parquet doubles round-trip exactly), so the staged bytes — and
-    // every downstream census/swap/read-back — are bit-identical; what
-    // changes is the stage job: a column-pruned read + range write in
-    // place of the routing computation each of the four delete rows
-    // was re-paying (ann_ivf2_assign still prices the computation
-    // itself as its own bench row).
-    val serve = ivf2ServePath(dir)
-    if (!ivf2ServeMarker(serve).exists()) ivf2ServeBuild(spark, dir)
-    spark.read.schema(ivf2AssignSchema).parquet(s"$serve/assigned")
-      .repartitionByRange(8, col("vec_id"))
-      .write.mode("overwrite").parquet(tmp)
-    tmp
-  }
-
-  /** The COW delete kernel, factored out so DeleteSpec can snapshot
-    * file state around it: (1) find the files containing doomed rows —
-    * `vec_id < cutoff` pushes to parquet row-group stats, so on the
-    * range-clustered layout CLEAN files are pruned at the IO level and
-    * the census reads almost nothing; (2) rewrite ONLY those files'
-    * surviving rows; (3) swap — add the rewritten parts, drop the
-    * dirty originals. The file-list collect is bounded by the table's
-    * FILE count (8 here; a manifest at scale), never its row count.
-    * Plain-parquet staging makes the swap filesystem ops where
-    * Delta/Iceberg commit a manifest atomically — the row-level work
-    * (decode + filter + re-encode, the term that matters at 100 TB) is
-    * identical and touches the dirty subset only.
-    *
-    * CRASH CONTRACT (the marker protocol the serve index already has):
-    * the swap is journaled through `_GRAFT_SWAP_PENDING` inside the
-    * table dir — [[ivf2DeletePrepare]] stages ALL surviving rows
-    * (closed by Spark's committer; the journal itself is hsync'd, the
-    * parts are not — so the contract is exact under process kills and
-    * journal-synced best-effort under power loss), then commits the
-    * journal with an atomic rename; only
-    * [[ivf2DeleteRecover]] mutates the table, strictly roll-forward
-    * from the journal, each filesystem op checked and idempotent. A
-    * kill anywhere leaves one of two readable states: marker absent →
-    * the table is byte-identical to pre-delete (staged files live
-    * OUTSIDE the dir and `_`-prefixed files are invisible to parquet
-    * reads); marker present → the next [[ivf2DeleteRecover]] (which
-    * [[ivf2DeleteApply]] runs first, and any reader of a COW-
-    * maintained table must run before reading) completes the identical
-    * swap. No state serves a partial table. */
-  private[scale] def ivf2DeleteApply(spark: SparkSession, src: String, cutoff: Long,
-      schema: String = ivf2AssignSchema): Unit =
-    cowDeleteApply(spark, src, schema, col("vec_id") < cutoff)
-
-  /** The kernel behind [[ivf2DeleteApply]] with the doomed-row set as
-    * an explicit predicate (must be row-group-stats-prunable on the
-    * cluster key for the census to stay file-pruned): the retention
-    * rows delete `vec_id < cutoff`; [[annIvfSqDelete]]'s targeted
-    * purge deletes a scattered modular set. */
-  private[scale] def cowDeleteApply(spark: SparkSession, src: String,
-      schema: String, doomed: Column): Unit =
-    cowDeleteApplyBy(spark, src, schema, _.filter(doomed), _.filter(!doomed))
-
-  /** KEYED variant of the COW kernel — the fold half of the
-    * merge-on-read delete ([[annIvfSqMorFold]]): the doomed set arrives
-    * as a fit-sized id table (the tombstone sidecar), not a predicate,
-    * so the census selects doomed rows by a BROADCAST semi-join and
-    * stages survivors by the matching anti-join; journal and swap are
-    * shared verbatim with the predicate path. A keyed census cannot be
-    * row-group-pruned (scattered ids touch every file — that is
-    * precisely why the MOR rows defer it to compaction time). */
-  private[scale] def cowDeleteApplyKeys(spark: SparkSession, src: String,
-      schema: String, keys: DataFrame): Unit =
-    cowDeleteApplyBy(spark, src, schema,
-      _.join(broadcast(keys), Seq("vec_id"), "left_semi"),
-      _.join(broadcast(keys), Seq("vec_id"), "left_anti"))
-
-  private def cowDeleteApplyBy(spark: SparkSession, src: String, schema: String,
-      doomedRows: DataFrame => DataFrame,
-      survivors: DataFrame => DataFrame): Unit = {
-    ivf2DeleteRecover(spark, src) // finish any interrupted prior swap
-    if (cowDeletePrepareBy(spark, src, schema, doomedRows, survivors))
-      ivf2DeleteRecover(spark, src)
-  }
-
-  /** The assignment-table schema the COW kernel defaults to; the
-    * quantized-corpus delete ([[annSq8Delete]]) passes [[sq8Schema]] —
-    * the kernel itself is schema-agnostic (census, stage, swap). */
+  /** The stored assignment-table schema (the routing index's
+    * `assigned`, and the append/delete tables staged from it). */
   private[scale] val ivf2AssignSchema = "vec_id BIGINT, cid BIGINT, d DOUBLE"
 
-  /** The stored int8-corpus schema ([[sq8ServeBuild]]'s qtable and the
-    * append/delete maintenance rows over it). */
+  /** The stored int8-corpus schema ([[sq8Stored]] and the append/delete
+    * tables staged from it). */
   private[scale] val sq8Schema = "vec_id BIGINT, q ARRAY<TINYINT>, qn DOUBLE"
-
-  /** Swap journal path — `_`-prefixed, so Spark/DuckDB parquet reads
-    * of the table dir never see it. Its EXISTENCE is the commit point:
-    * written only after every surviving row is durably staged. */
-  private[scale] def ivf2SwapMarker(src: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(src, "_GRAFT_SWAP_PENDING")
-
-  /** Phases 1+2 of the COW delete: census the dirty files, stage their
-    * surviving rows OUTSIDE the table dir, then COMMIT the swap intent
-    * — a tab-separated journal (`R staged dest` per part to adopt,
-    * `D path` per original to drop) written to a temp name and
-    * atomically renamed to [[ivf2SwapMarker]]. Returns false (no
-    * journal, table untouched) when nothing is dirty. Crash anywhere
-    * in here ⇒ marker absent ⇒ readers serve the pre-delete table and
-    * the orphan stage dir is exit-swept by [[graft.util.Scratch]]. */
-  private[scale] def ivf2DeletePrepare(spark: SparkSession, src: String, cutoff: Long,
-      schema: String = ivf2AssignSchema): Boolean =
-    cowDeletePrepare(spark, src, schema, col("vec_id") < cutoff)
-
-  private[scale] def cowDeletePrepare(spark: SparkSession, src: String,
-      schema: String, doomed: Column): Boolean =
-    cowDeletePrepareBy(spark, src, schema, _.filter(doomed), _.filter(!doomed))
-
-  private def cowDeletePrepareBy(spark: SparkSession, src: String, schema: String,
-      doomedRows: DataFrame => DataFrame,
-      survivors: DataFrame => DataFrame): Boolean = {
-    import org.apache.hadoop.fs.Path
-    // the file-path metadata column is attached at the scan, BEFORE the
-    // caller's doomed-row selection runs (a filter sees through the
-    // projection; the keyed variant's semi-join could not request
-    // _metadata on its own output)
-    val dirty = doomedRows(spark.read.schema(schema).parquet(src)
-        .withColumn("__graft_fp", col("_metadata.file_path")))
-      .select(col("__graft_fp")).distinct()
-      .collect().map(_.getString(0))
-    if (dirty.isEmpty) return false
-    val stage = graft.util.Scratch.register(s"$src.rewrite")
-    survivors(spark.read.schema(schema).parquet(dirty.toIndexedSeq: _*))
-      .write.mode("overwrite").parquet(stage)
-    val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new Path(stage))
-      .filter(_.getPath.getName.startsWith("part-")).map(_.getPath)
-    val journal = parts.map(p => s"R\t$p\t${p.getName}") ++ dirty.map(d => s"D\t$d")
-    val tmpMarker = new Path(src, "_GRAFT_SWAP_PENDING.tmp")
-    val out = fs.create(tmpMarker, true)
-    out.write((journal.mkString("\n") + "\n").getBytes("UTF-8"))
-    // flush the journal to the device before the commit rename: without
-    // it the marker's EXISTENCE could survive a power loss while its
-    // CONTENT (or a staged part it references) sat in the page cache —
-    // and roll-forward would adopt a truncated file. hsync() syncs where
-    // the filesystem supports Syncable (HDFS, local RawLocalFileSystem)
-    // and degrades to a flush elsewhere. Durability scope: the journal
-    // is synced here; the staged parquet parts are closed by Spark
-    // committers without fsync, so the crash contract is exact for
-    // process kills and best-effort (journal-synced) for power loss —
-    // the same scope a plain-parquet lakehouse commit has without a
-    // WAL'd metastore.
-    out.hsync()
-    out.close()
-    require(fs.rename(tmpMarker, ivf2SwapMarker(src)),
-      s"COW swap: journal commit rename failed for $src")
-    true
-  }
-
-  /** Phase 3, strictly ROLL-FORWARD from the committed journal —
-    * adopt every staged part still at its staged path (renames are
-    * per-file atomic; one already adopted by an interrupted attempt no
-    * longer exists at the staged path and is skipped), then drop every
-    * dirty original still present, then clear the stage dir and the
-    * journal itself. Every filesystem op that should succeed is
-    * REQUIRED to (a false return — name collision, cross-FS rename,
-    * permission — raises instead of silently losing rows, the failure
-    * mode of the pre-r13 unchecked swap). Idempotent: re-running after
-    * a kill at ANY line completes the same swap; a no-marker call is a
-    * no-op. */
-  private[scale] def ivf2DeleteRecover(spark: SparkSession, src: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = ivf2SwapMarker(src)
-    if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val journal = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    journal.foreach(_.split('\t') match {
-      case Array("R", staged, destName) =>
-        val s = new Path(staged)
-        if (fs.exists(s))
-          require(fs.rename(s, new Path(src, destName)),
-            s"COW swap: adopt rename failed: $staged -> $src/$destName")
-      case _ => ()
-    })
-    journal.foreach(_.split('\t') match {
-      case Array("D", doomed) =>
-        val d = new Path(doomed)
-        if (fs.exists(d))
-          require(fs.delete(d, false), s"COW swap: drop failed: $doomed")
-      case _ => ()
-    })
-    val stage = new Path(s"$src.rewrite")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    require(fs.delete(marker, false), s"COW swap: journal clear failed for $src")
-  }
 
   /** COW DELETE from the stored assignment table — the index-lifecycle
     * operator FAISS calls `remove_ids` and a lakehouse calls `DELETE
     * WHERE`, completing the family (build → search → serve → append →
     * compact → staleness → DELETE): a retention purge drops the oldest
     * 5% of vectors (`vec_id < n/20`) from the range-clustered staged
-    * table via [[ivf2DeleteApply]]'s file-pruned copy-on-write, then
+    * table via [[StoredIndex.delete]]'s file-pruned copy-on-write, then
     * the read-back is oracle-checked against the full assignment SQL
     * filtered by the same predicate. Deletion applies to the
     * assignment TABLE only — the day-0 centroid/super sets are part of
@@ -1196,8 +965,14 @@ object Similarity {
     * stop appearing in results; the codebook is untouched until the
     * [[annIvf2Staleness]] census says rebuild). */
   def annIvf2Delete(spark: SparkSession, dir: String): DataFrame = {
-    val src = ivf2DeleteStage(spark, dir)
-    ivf2DeleteApply(spark, src, corpusCount(spark, dir) / 20L)
+    // staged FROM the stored index — the table a deployment's delete
+    // actually mutates — instead of recomputing the n×k1 assignment
+    // argmins per delete row (ann_ivf2_assign prices that computation as
+    // its own bench row); parquet doubles round-trip exactly, so the
+    // staged bytes are those of ivf2Index().assigned
+    val src = StoredIndex.stage(ivf2Stored(spark, dir)._3, "ivf2del", dir)
+    StoredIndex.delete(spark, src, ivf2AssignSchema,
+      StoredIndex.Where(col("vec_id") < corpusCount(spark, dir) / 20L))
     ivf2AssignmentView(spark, src)
   }
 
@@ -1209,17 +984,10 @@ object Similarity {
     * the same dir must not race each other's index rewrites — the same
     * scratch-collision class the k1 COW table hit (Sinks.k1CowPath).
     * Digest-keyed and swept at JVM exit via [[graft.util.Scratch]];
-    * within a JVM the serve index is still written once and reused. */
+    * within a JVM the serve index is written once per corpus and
+    * reused. */
   private[scale] def ivf2ServePath(dir: String): String =
     graft.util.Scratch.path("ivf2serve", dir)
-
-  /** Serve-index completion marker. Gating the read path on this file
-    * — written only AFTER all three tables land — rather than on bare
-    * directory existence means a JVM that crashed mid-build (or a
-    * stale pid-recycled dir) triggers a rebuild instead of silently
-    * serving a partial index. */
-  private def ivf2ServeMarker(tmp: String): java.io.File =
-    new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
 
   /** The read-only serve path: search against the materialized index.
     * Bench's warmup runs the public entry (which writes the index)
@@ -1227,7 +995,7 @@ object Similarity {
     * `dir` yet, self-heal by building once — so the measured warm call
     * is always the stored-table search. */
   private[graft] def ivf2ServeRead(spark: SparkSession, dir: String): DataFrame = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
+    val (supers, groups, assigned) = ivf2Stored(spark, dir)
     top3(ivf2Route(corpus(spark, dir), supers, groups, assigned))
   }
 
@@ -1322,11 +1090,7 @@ object Similarity {
     val c = corpus(spark, dir)
     val cents = c.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
+    val dist = sqDist("v", "cv")
     val assigned = c.join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("v"), col("nrm"), col("cid"), dist.as("dist"))
     // hash-agg packed argmin (see annIvfAssign) for the corpus-wide
@@ -1484,10 +1248,7 @@ object Similarity {
     // centroid count from the shared corpus-size schedule)
     val cents = c.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dist = (0 until 64).map { d =>
-      val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-      diff * diff
-    }.reduce(_ + _)
+    val dist = sqDist("v", "cv")
     val assigned = c.join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("v"), col("nrm"), col("cid"), dist.as("dist"))
     val lists = assigned
@@ -1710,7 +1471,7 @@ object Similarity {
     // measures is unchanged. sq8/pq/opq stay self-contained: sq8 is
     // the inline half of the round-trip proof, and pq/opq have no
     // stored index to read.
-    val (s2, g2, a2) = ivf2StoredIndex(spark, dir)
+    val (s2, g2, a2) = ivf2Stored(spark, dir)
     recallOf(top10(ivf2Route(corpus(spark, dir), s2, g2, a2)), "ivf2")
       .union(recallOf(top10(lshMpCandidates(spark, dir)), "lsh_mp"))
       // r12: the SQ8 index joins the acceptance sheet — its stage-1
@@ -2484,41 +2245,23 @@ object Similarity {
     * range and TINYINT-storable symmetry FAISS SQ8 keeps. maxabs=0
     * (the all-zero vector) quantizes to all-zero with qn 0; stage 1
     * NULLIFs its cosine in both engines (see [[sq8ScoredOver]]). */
-  private[scale] def sq8Corpus(spark: SparkSession, dir: String): DataFrame = {
-    val c = corpus(spark, dir)
-    c.withColumn("ma", array_max(transform(col("v"), x => abs(x))))
-      .withColumn("q", when(col("ma") > 0,
+  private[scale] def sq8Corpus(spark: SparkSession, dir: String): DataFrame =
+    sq8Quantize(corpus(spark, dir), "q", "qn")
+
+  /** The SQ8 quantizer over the double vector column `v` of `df`: adds
+    * its max-|x| `ma`, the quantized vector as `q` and that vector's
+    * norm as `qn` — the one expression [[sq8Corpus]] and the streaming
+    * near-dup channel ([[graft.streaming.IndexNearDup]]) both quantize
+    * with, so a stored list and an arriving vector score bit-identically. */
+  private[graft] def sq8Quantize(df: DataFrame, q: String, qn: String): DataFrame =
+    df.withColumn("ma", array_max(transform(col("v"), x => abs(x))))
+      .withColumn(q, when(col("ma") > 0,
           // Spark's floor returns BIGINT; cast back so the array stays
           // ARRAY<DOUBLE> for graft_dot (values are exact small ints)
           transform(col("v"), x => greatest(lit(-127.0),
             least(lit(127.0), floor(x * lit(127.0) / col("ma")).cast("double")))))
         .otherwise(transform(col("v"), _ => lit(0.0))))
-      .withColumn("qn", sqrt(dot(col("q"), col("q"))))
-  }
-
-  /** ANN query-set size — 10 by default (the oracle-pinned value every
-    * SQL mirror hardcodes as `vec_id < 10`); the env knob exists ONLY
-    * for scale receipts (SCALE.md's |queries|-scaling row runs the
-    * serve paths at 1000 to pin that serving cost grows with
-    * |queries|·(routing + probed lists) while the corpus-side scan is
-    * shared). Never set it under MatCheck/Verify/Bench — the DuckDB
-    * mirrors stay at 10 by design, so a non-default value is an
-    * intentional oracle mismatch; a set knob therefore fails FAST on a
-    * malformed or non-positive value (a bare NumberFormatException
-    * surfacing from deep inside a query plan was the r14 advice nit)
-    * and every oracle-divergence hazard it creates is asserted at the
-    * point of hazard (see [[annIvfSqDelete]]'s query-survival check). */
-  private[scale] def annQueryCount: Int =
-    sys.env.get("SPARK_GRAFT_ANN_QUERIES") match {
-      case None => 10
-      case Some(s) =>
-        val n = try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_ANN_QUERIES must be a positive integer, got '$s'")
-        }
-        require(n > 0, s"SPARK_GRAFT_ANN_QUERIES must be positive, got $n")
-        n
-    }
+      .withColumn(qn, sqrt(dot(col(q), col(q))))
 
   /** The quantized query vectors (query_id, qq, qqn), derived from the
     * SAME frame stage 1 scans: inline callers pass the inline-quantized
@@ -2528,7 +2271,7 @@ object Similarity {
     * the query re-score rows) instead of re-quantizing the float corpus
     * for 10 query rows per run. */
   private def sq8QueryOf(stage1: DataFrame): DataFrame =
-    stage1.filter(col("vec_id") < annQueryCount)
+    stage1.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q").as("qq"), col("qn").as("qqn"))
 
   /** Stage-1 quantized scoring over an EXPLICIT quantized-corpus frame
@@ -2572,7 +2315,7 @@ object Similarity {
       .filter(col("rk") <= 10)
       .select(col("query_id"), col("vec_id"))
     val exact = corpus(spark, dir)
-    val qx = exact.filter(col("vec_id") < annQueryCount)
+    val qx = exact.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnr"))
     cand.join(exact, Seq("vec_id"))
       .join(qx, Seq("query_id"))
@@ -2615,59 +2358,45 @@ object Similarity {
     * stage 1 and touches the float table only for the ≤ 100 stage-2
     * winners plus the 10-row query set. */
   def annSq8Serve(spark: SparkSession, dir: String): DataFrame = {
-    sq8ServeBuild(spark, dir)
+    sq8Stored(spark, dir, rebuild = true)
     sq8ServeRead(spark, dir)
   }
 
-  /** The index-build write: quantize once, land `(vec_id, q TINYINT[],
-    * qn)`, then the completion marker. */
-  private def sq8ServeBuild(spark: SparkSession, dir: String): Unit = {
-    val tmp = sq8ServePath(dir)
-    sq8ServeMarker(tmp).delete() // invalidate before touching the table
-    sq8QTable(spark, dir).write.mode("overwrite").parquet(s"$tmp/qtable")
-    sq8ServeMarker(tmp).createNewFile()
-  }
-
   /** The storable quantized corpus `(vec_id, q TINYINT[64], qn)` — the
-    * frame every int8-table write lands ([[sq8ServeBuild]],
-    * [[annSq8Append]]'s day-0 build and batch, the delete fixture). */
-  private def sq8QTable(spark: SparkSession, dir: String): DataFrame =
+    * frame every int8-table write lands ([[sq8Stored]], [[annSq8Append]]'s
+    * day-0 build and batch). */
+  private[scale] def sq8QTable(spark: SparkSession, dir: String): DataFrame =
     sq8Corpus(spark, dir)
       .select(col("vec_id"),
         transform(col("q"), _.cast("tinyint")).as("q"), col("qn"))
 
+  /** The stored int8 corpus of `dir` ([[sq8Schema]]), quantized once
+    * per corpus fingerprint behind [[StoredIndex.ensure]]'s marker —
+    * the table the serve, delete, recall and streaming rows scan;
+    * `rebuild` forces the build the serve rows time. */
+  private[scale] def sq8Stored(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): DataFrame =
+    spark.read.schema(sq8Schema).parquet(StoredIndex.ensure(spark, dir, sq8ServePath(dir),
+      rebuild)(sq8QTable(spark, dir).write.mode("overwrite").parquet(_)))
+
   /** The stored quantized corpus as a stage-1 frame (TINYINT cast back
-    * to double — lossless), building the table first on a fresh JVM.
+    * to double — lossless, every cell an integer in [-127, 127]).
     * Shared by [[sq8ServeRead]] and the `sq8_serve` row of
     * [[annRecall2]]. */
-  private[scale] def sq8StoredStage1(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = sq8ServePath(dir)
-    if (!sq8ServeMarker(tmp).exists()) sq8ServeBuild(spark, dir)
-    sq8TableView(spark, s"$tmp/qtable")
-  }
+  private[scale] def sq8StoredStage1(spark: SparkSession, dir: String): DataFrame =
+    sq8Stage1(sq8Stored(spark, dir))
 
-  /** A stored int8 table read back as a stage-1 frame (TINYINT cast to
-    * double — lossless). */
-  private def sq8TableView(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(sq8Schema).parquet(path)
-      .select(col("vec_id"), vecDouble(col("q")).as("q"), col("qn"))
+  /** A stored int8 table as a stage-1 frame (TINYINT cast to double). */
+  private[scale] def sq8Stage1(table: DataFrame): DataFrame =
+    table.select(col("vec_id"), vecDouble(col("q")).as("q"), col("qn"))
 
   /** Per-dir, per-JVM, exit-swept — same rationale as [[ivf2ServePath]]. */
   private[scale] def sq8ServePath(dir: String): String =
     graft.util.Scratch.path("sq8serve", dir)
 
-  /** Completion marker gating [[sq8ServeRead]] — written only AFTER
-    * the quantized table lands, so a crash mid-write triggers a
-    * rebuild instead of serving a partial table (the
-    * [[ivf2ServeMarker]] protocol). */
-  private def sq8ServeMarker(tmp: String): java.io.File =
-    new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
-
-  /** The read-only SQ8 serve path: stage 1 over the stored int8 table
-    * (cast back to double for the codegen'd dot — lossless, every cell
-    * an integer in [-127, 127]), stage 2 unchanged. Self-heals by
-    * building once on a fresh JVM, so the measured warm call is always
-    * the stored-table scan. */
+  /** The read-only SQ8 serve path: stage 1 over the stored int8 table,
+    * stage 2 unchanged. Self-heals by building once on a fresh JVM, so
+    * the measured warm call is always the stored-table scan. */
   private[graft] def sq8ServeRead(spark: SparkSession, dir: String): DataFrame =
     sq8Rescore(spark, dir, sq8ScoredOver(spark, dir, sq8StoredStage1(spark, dir)))
 
@@ -2690,55 +2419,12 @@ object Similarity {
     * outgrow, so the int8 table never needs a staleness-driven rebuild.
     * Reference anchor: the K5 retention/compaction lifecycle rows
     * (SURVEY §2.5) that `ann_ivf2_append` already follows. */
-  def annSq8Append(spark: SparkSession, dir: String): DataFrame =
+  def annSq8Append(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = StoredIndex.writeDay0(spark, dir, sq8QTable(spark, dir),
+      graft.util.Scratch.path("sq8append", dir))
+    StoredIndex.appendBatch(spark, dir, sq8QTable(spark, dir), tmp)
     sq8Rescore(spark, dir, sq8ScoredOver(spark, dir,
-      sq8TableView(spark, sq8AppendWrite(spark, dir))))
-
-  /** Both phases of the append-table write; the spec drives the phases
-    * separately to snapshot file state between them. */
-  private def sq8AppendWrite(spark: SparkSession, dir: String): String = {
-    val tmp = sq8AppendDay0(spark, dir)
-    sq8AppendBatch(spark, dir, tmp)
-    tmp
-  }
-
-  /** Day-0 build: quantize and land the first 90% of vec_ids. */
-  private[scale] def sq8AppendDay0(spark: SparkSession, dir: String): String = {
-    val tmp = graft.util.Scratch.path("sq8append", dir)
-    val cut = lit(corpusCount(spark, dir) * 9L / 10L)
-    sq8QTable(spark, dir).filter(col("vec_id") < cut)
-      .write.mode("overwrite").parquet(tmp)
-    tmp
-  }
-
-  /** The arriving batch: quantize the last 10% and append — a pure
-    * file add, no day-0 partition is rewritten. */
-  private[scale] def sq8AppendBatch(spark: SparkSession, dir: String, tmp: String): Unit = {
-    val cut = lit(corpusCount(spark, dir) * 9L / 10L)
-    sq8QTable(spark, dir).filter(col("vec_id") >= cut)
-      .write.mode("append").parquet(tmp)
-  }
-
-  /** The staged table [[annSq8Delete]] mutates: the int8 corpus
-    * RANGE-CLUSTERED on vec_id into a fixed 8 files — same rationale
-    * as [[ivf2DeleteStage]]: a delete predicate on the cluster key
-    * touches a contiguous file subset, so copy-on-write stays
-    * file-pruned instead of degenerating to a full rewrite. */
-  private[scale] def sq8DeleteStage(spark: SparkSession, dir: String,
-      tag: String = "sq8del"): String = {
-    val tmp = graft.util.Scratch.path(tag, dir)
-    // r16: stage FROM the stored int8 table (one markered build per
-    // session — the table a production delete mutates) instead of
-    // re-quantizing the float corpus per delete row; TINYINT/DOUBLE
-    // parquet round-trips are exact, so the staged bytes are identical
-    // (same rationale as [[ivf2DeleteStage]]; ann_sq8_search keeps
-    // pricing the inline quantization as a self-contained row).
-    val serve = sq8ServePath(dir)
-    if (!sq8ServeMarker(serve).exists()) sq8ServeBuild(spark, dir)
-    spark.read.schema(sq8Schema).parquet(s"$serve/qtable")
-      .repartitionByRange(8, col("vec_id"))
-      .write.mode("overwrite").parquet(tmp)
-    tmp
+      sq8Stage1(spark.read.schema(sq8Schema).parquet(tmp))))
   }
 
   /** COW DELETE from the stored int8 corpus — the delete half of the
@@ -2751,16 +2437,21 @@ object Similarity {
     * the composed index — see the contract note on [[annIvfSqServe]])
     * would keep returning it. Same retention predicate and machinery
     * as the assignment delete: drop the oldest 5% (`vec_id < n/20`)
-    * from the range-clustered staged table via [[ivf2DeleteApply]]'s
-    * journaled file-pruned copy-on-write (schema-parameterized — the
-    * kernel is census/stage/swap and never interprets columns). The
+    * from the range-clustered staged table via [[StoredIndex.delete]]'s
+    * journaled file-pruned copy-on-write (the kernel is
+    * census/stage/swap and never interprets columns). The
     * read-back projects the surviving quantized rows to scalars
     * `(vec_id, qnorm, qsum)` — qn and the cell sum are integer-exact,
     * so the DuckDB oracle recomputes them from the float table and
     * hash-matches bit-for-bit. */
   def annSq8Delete(spark: SparkSession, dir: String): DataFrame = {
-    val src = sq8DeleteStage(spark, dir)
-    ivf2DeleteApply(spark, src, corpusCount(spark, dir) / 20L, sq8Schema)
+    // staged FROM the stored int8 table (the table a production delete
+    // mutates) instead of re-quantizing the float corpus per delete row;
+    // TINYINT/DOUBLE parquet round-trips are exact, so the staged bytes
+    // are identical (ann_sq8_search keeps pricing the inline quantization)
+    val src = StoredIndex.stage(sq8Stored(spark, dir), "sq8del", dir)
+    StoredIndex.delete(spark, src, sq8Schema,
+      StoredIndex.Where(col("vec_id") < corpusCount(spark, dir) / 20L))
     spark.read.schema(sq8Schema).parquet(src)
       .select(col("vec_id"), round(col("qn"), 6).as("qnorm"),
         aggregate(vecDouble(col("q")), lit(0.0), _ + _).as("qsum"))
@@ -2788,6 +2479,33 @@ object Similarity {
       |FROM sqn
       |WHERE vec_id >= (SELECT count(*) // 20 FROM embeddings)""".stripMargin
 
+  /** The scattered GDPR-purge predicate both composed-delete rows
+    * apply — `vec_id % 20 = 13`, exactly 5% of every id block at every
+    * SF (modular, so the scaled fixtures' replica-offset id spaces keep
+    * the same fraction), chosen to defeat row-group pruning by design.
+    * Mirrored as a SQL conjunct by [[ivfSqDoomedSql]]; change BOTH or
+    * neither. */
+  private[scale] val ivfSqDoomed: Column = col("vec_id") % 20 === 13
+  private val ivfSqDoomedSql: String = " AND c.vec_id % 20 <> 13"
+
+  /** The two stored halves staged for a composed delete: the assignment
+    * table and the int8 corpus, range-clustered under `tag`+A / `tag`+Q.
+    * They are independent writes, so they overlap. */
+  private[scale] def ivfSqStage(spark: SparkSession, dir: String,
+      tag: String): (String, String) =
+    graft.util.Par.both(
+      StoredIndex.stage(ivf2Stored(spark, dir)._3, s"${tag}A", dir),
+      StoredIndex.stage(sq8Stored(spark, dir), s"${tag}Q", dir))
+
+  /** The composed search over the two (post-delete) staged halves, routed
+    * through the STORED supers/groups — the composed production shape. */
+  private def ivfSqServeStaged(spark: SparkSession, dir: String, asg: DataFrame,
+      qt: DataFrame): DataFrame = {
+    val (supers, groups, _) = ivf2Stored(spark, dir)
+    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
+      asg.select(col("vec_id"), col("cid")), sq8Stage1(qt)))
+  }
+
   /** COMPOSED IVF-SQ8 DELETE — the end-to-end FAISS `remove_ids` for
     * the production index: one purge predicate applied to BOTH stored
     * halves (the assignment table AND the int8 corpus, each through
@@ -2802,57 +2520,30 @@ object Similarity {
     * case. Together the delete family now covers both ends: clustered
     * range → file-pruned COW ([[annIvf2Delete]]/[[annSq8Delete]]);
     * scattered ids → full rewrite (this row). The query set
-    * (vec_id < 10; 0–9 mod 20 ≠ 13) survives the purge. Centroids and
-    * supers stay — frozen-index semantics, same as [[annIvf2Delete]].
+    * (vec_id < 10; 0–9 mod 20 ≠ 13) survives the purge — the oracle's
+    * equivalence needs that, since Spark's quantized queries come from
+    * the PURGED qtable while the oracle's q8 CTE is unpurged
+    * (MorDeleteSpec pins it). Centroids and supers stay — frozen-index
+    * semantics, same as [[annIvf2Delete]].
     * The oracle is the ivfsq search SQL with the purged ids excluded
     * from the candidate set — equivalent to deleting from both tables
     * because a stage-1 candidate requires presence in BOTH (the list
     * entry routes it, the code row scores it). */
-  /** The scattered GDPR-purge predicate both composed-delete rows
-    * apply — `vec_id % 20 = 13`, exactly 5% of every id block at every
-    * SF (modular, so the scaled fixtures' replica-offset id spaces keep
-    * the same fraction), chosen to defeat row-group pruning by design.
-    * Mirrored as a SQL conjunct by [[ivfSqDoomedSql]]; change BOTH or
-    * neither. */
-  private[scale] val ivfSqDoomed: Column = col("vec_id") % 20 === 13
-  private def ivfSqDoomedLong(id: Long): Boolean = id % 20 == 13
-  private val ivfSqDoomedSql: String = " AND c.vec_id % 20 <> 13"
-
-  /** The oracle-equivalence guard the r14 advice asked to enforce
-    * rather than imply: Spark's quantized queries come from the PURGED
-    * qtable while the oracle's q8 CTE is unpurged, so the equivalence
-    * holds only while every query id survives the purge. Checked at
-    * the point of hazard — a doomed query id (a changed predicate, or
-    * the receipts-only SPARK_GRAFT_ANN_QUERIES knob pushed past one)
-    * now fails loudly instead of silently dropping whole queries on
-    * the Spark side only. */
-  private def requireQueriesSurvive(op: String): Unit = {
-    val doomedQ = (0L until annQueryCount.toLong).filter(ivfSqDoomedLong)
-    require(doomedQ.isEmpty,
-      s"$op: query ids ${doomedQ.mkString(",")} fall inside the purge " +
-        "predicate — the Spark side would drop their queries while the " +
-        "oracle keeps them; shrink SPARK_GRAFT_ANN_QUERIES or change the predicate")
-  }
-
   def annIvfSqDelete(spark: SparkSession, dir: String): DataFrame = {
-    requireQueriesSurvive("ann_ivfsq_delete")
-    // r15: the two halves (assignment table, int8 corpus) stage and
-    // COW-rewrite INDEPENDENT scratch dirs with independent journals —
-    // run them concurrently (guide §2.6) instead of idling the cluster
-    // through each half's write/census/swap barriers in turn
+    // the two halves stage and COW-rewrite INDEPENDENT dirs with
+    // independent journals — run each half's pipeline concurrently
+    // instead of idling the cluster through its write/census/swap
+    // barriers in turn
+    def purged(rows: => DataFrame, schema: String, tag: String): String = {
+      val p = StoredIndex.stage(rows, tag, dir)
+      StoredIndex.delete(spark, p, schema, StoredIndex.Where(ivfSqDoomed))
+      p
+    }
     val (asg, qt) = graft.util.Par.both(
-      { val a = ivf2DeleteStage(spark, dir, "ivfsqdelA")
-        cowDeleteApply(spark, a, ivf2AssignSchema, ivfSqDoomed); a },
-      { val q = sq8DeleteStage(spark, dir, "ivfsqdelQ")
-        cowDeleteApply(spark, q, sq8Schema, ivfSqDoomed); q })
-    // r16: the serve routes through the STORED supers/groups (already
-    // built for the staging above) — the composed production shape —
-    // instead of recomputing them from the corpus after the overlap
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir)
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      spark.read.schema(ivf2AssignSchema).parquet(asg)
-        .select(col("vec_id"), col("cid")),
-      sq8TableView(spark, qt)))
+      purged(ivf2Stored(spark, dir)._3, ivf2AssignSchema, "ivfsqdelA"),
+      purged(sq8Stored(spark, dir), sq8Schema, "ivfsqdelQ"))
+    ivfSqServeStaged(spark, dir, spark.read.schema(ivf2AssignSchema).parquet(asg),
+      spark.read.schema(sq8Schema).parquet(qt))
   }
 
   // the composed search oracle with the purged ids excluded from the
@@ -2878,11 +2569,7 @@ object Similarity {
     * anti-join per half — SCALE.md carries the measured comparison
     * against the COW row. */
   def annIvfSqDeleteMor(spark: SparkSession, dir: String): DataFrame = {
-    requireQueriesSurvive("ann_ivfsq_delete_mor")
-    // the two staged halves are independent writes — overlap them (§2.6)
-    val (asg, qt) = graft.util.Par.both(
-      ivf2DeleteStage(spark, dir, "ivfsqmorA"),
-      sq8DeleteStage(spark, dir, "ivfsqmorQ"))
+    val (asg, qt) = ivfSqStage(spark, dir, "ivfsqmor")
     val tomb = ivfSqMorTombstones(spark, dir, asg, "ivfsqmorT")
     ivfSqMorServeRead(spark, dir, asg, qt, tomb)
   }
@@ -2890,20 +2577,15 @@ object Similarity {
   /** The MOR delete step: derive the purge-set id table from the
     * predicate over ONE column of the assignment table (a production
     * purge set arrives as ids; this is its fixture stand-in) and land
-    * it as the sidecar — a single tiny file, gated by the completion-
-    * marker protocol every other index table uses. The stored halves
-    * are not touched: this write IS the entire delete-time cost. */
+    * it as the sidecar — a single tiny file behind the
+    * [[StoredIndex]] completion marker. The stored halves are not
+    * touched: this write IS the entire delete-time cost. */
   private[scale] def ivfSqMorTombstones(spark: SparkSession, dir: String,
-      asg: String, tag: String): String = {
-    val tomb = graft.util.Scratch.path(tag, dir)
-    val marker = new java.io.File(s"$tomb/_GRAFT_INDEX_COMPLETE")
-    marker.delete()
-    spark.read.schema(ivf2AssignSchema).parquet(asg)
-      .filter(ivfSqDoomed).select(col("vec_id"))
-      .coalesce(1).write.mode("overwrite").parquet(tomb)
-    marker.createNewFile()
-    tomb
-  }
+      asg: String, tag: String): String =
+    StoredIndex.ensure(spark, dir, graft.util.Scratch.path(tag, dir), rebuild = true)(
+      spark.read.schema(ivf2AssignSchema).parquet(asg)
+        .filter(ivfSqDoomed).select(col("vec_id"))
+        .coalesce(1).write.mode("overwrite").parquet(_))
 
   /** The merge-on-read serve: each stored half applies the tombstones
     * at read time via a broadcast anti-join, then the composed search
@@ -2912,23 +2594,19 @@ object Similarity {
     * contract. */
   private[scale] def ivfSqMorServeRead(spark: SparkSession, dir: String,
       asg: String, qt: String, tomb: String): DataFrame = {
-    require(new java.io.File(s"$tomb/_GRAFT_INDEX_COMPLETE").exists(),
-      s"tombstone sidecar incomplete at $tomb")
+    require(StoredIndex.current(spark, dir, tomb), s"tombstone sidecar incomplete at $tomb")
     val tombIds = spark.read.schema("vec_id BIGINT").parquet(tomb)
     def live(df: DataFrame): DataFrame =
       df.join(broadcast(tombIds), Seq("vec_id"), "left_anti")
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir) // r16: stored routing
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      live(spark.read.schema(ivf2AssignSchema).parquet(asg))
-        .select(col("vec_id"), col("cid")),
-      live(sq8TableView(spark, qt))))
+    ivfSqServeStaged(spark, dir, live(spark.read.schema(ivf2AssignSchema).parquet(asg)),
+      live(spark.read.schema(sq8Schema).parquet(qt)))
   }
 
   /** The FOLD half of the merge-on-read delete — compaction applying
     * the accumulated tombstones to the data files (Delta/Iceberg's
     * OPTIMIZE folding deletion vectors): both stored halves run the
-    * KEYED COW kernel ([[cowDeleteApplyKeys]] — doomed rows selected by
-    * a broadcast semi-join against the sidecar, journal/swap machinery
+    * COW kernel with the sidecar as its [[StoredIndex.Keys]] (doomed
+    * rows selected by a broadcast semi-join, journal/swap machinery
     * shared with the eager row), the sidecar is cleared, and the
     * composed search then serves the folded tables with NO anti-join in
     * the plan. Same survivors as both other delete rows, same oracle —
@@ -2937,23 +2615,17 @@ object Similarity {
     * (at compaction, amortized across every other reason to compact,
     * instead of inline with the delete). */
   def annIvfSqMorFold(spark: SparkSession, dir: String): DataFrame = {
-    requireQueriesSurvive("ann_ivfsq_mor_fold")
-    // staging, and later the two keyed folds, touch independent dirs
-    // with independent journals — overlap each pair (§2.6)
-    val (asg, qt) = graft.util.Par.both(
-      ivf2DeleteStage(spark, dir, "ivfsqfoldA"),
-      sq8DeleteStage(spark, dir, "ivfsqfoldQ"))
+    val (asg, qt) = ivfSqStage(spark, dir, "ivfsqfold")
     val tomb = ivfSqMorTombstones(spark, dir, asg, "ivfsqfoldT")
-    val keys = spark.read.schema("vec_id BIGINT").parquet(tomb)
+    val keys = StoredIndex.Keys(spark.read.schema("vec_id BIGINT").parquet(tomb))
+    // the two keyed folds touch independent dirs with independent
+    // journals — overlap them
     graft.util.Par.both(
-      cowDeleteApplyKeys(spark, asg, ivf2AssignSchema, keys),
-      cowDeleteApplyKeys(spark, qt, sq8Schema, keys))
+      StoredIndex.delete(spark, asg, ivf2AssignSchema, keys),
+      StoredIndex.delete(spark, qt, sq8Schema, keys))
     graft.util.Scratch.cleanupPath(tomb) // tombstones folded in: sidecar retires
-    val (supers, groups, _) = ivf2StoredIndex(spark, dir) // r16: stored routing
-    sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups,
-      spark.read.schema(ivf2AssignSchema).parquet(asg)
-        .select(col("vec_id"), col("cid")),
-      sq8TableView(spark, qt)))
+    ivfSqServeStaged(spark, dir, spark.read.schema(ivf2AssignSchema).parquet(asg),
+      spark.read.schema(sq8Schema).parquet(qt))
   }
 
   /** IVF-SQ8 — the composed index FAISS ships as `IVF<k>,SQ8`, and the
@@ -2992,7 +2664,7 @@ object Similarity {
   /** The quantized probed-list scan over EXPLICIT index frames — the
     * same kernel serves the self-contained query ([[ivfSqScored]]) and
     * the full production composition ([[ivfSqServeRead]]: routing
-    * tables from [[ivf2StoredIndex]], corpus from
+    * tables from [[ivf2Stored]], corpus from
     * [[sq8StoredStage1]]). */
   private[scale] def ivfSqScoredOver(spark: SparkSession, dir: String,
       supers: DataFrame, groups: DataFrame, assigned: DataFrame,
@@ -3037,15 +2709,15 @@ object Similarity {
     * [[annSq8Serve]] has no such join — its deletes MUST go through
     * [[annSq8Delete]]. */
   def annIvfSqServe(spark: SparkSession, dir: String): DataFrame = {
-    ivf2ServeBuild(spark, dir)
-    sq8ServeBuild(spark, dir)
+    ivf2Stored(spark, dir, rebuild = true)
+    sq8Stored(spark, dir, rebuild = true)
     ivfSqServeRead(spark, dir)
   }
 
   /** The read-only composed serve path, self-healing both stored
     * halves on a fresh JVM. */
   private[graft] def ivfSqServeRead(spark: SparkSession, dir: String): DataFrame = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
+    val (supers, groups, assigned) = ivf2Stored(spark, dir)
     sq8Rescore(spark, dir, ivfSqScoredOver(spark, dir, supers, groups, assigned,
       sq8StoredStage1(spark, dir)))
   }
@@ -3059,24 +2731,19 @@ object Similarity {
     * is the stored int8 corpus re-laid one-row-per-inverted-list
     * (cid, entries array<struct<vec_id, q TINYINT[], qn>>) — the
     * contiguous-list layout FAISS itself serves from, materialized
-    * once behind the completion-marker protocol every other index
-    * table uses. List size is bounded by the k-schedule (~256 vectors
+    * once per corpus behind [[StoredIndex.ensure]]'s marker like every
+    * other index table. List size is bounded by the k-schedule (~256 vectors
     * per list), so a list row is O(tens of KB) at any corpus size and
     * the stream-static equi-join on cid is the whole per-arrival
     * candidate fetch. */
   private[graft] def ivfSqStreamIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (supers, groups, assigned) = ivf2StoredIndex(spark, dir)
-    sq8StoredStage1(spark, dir) // ensure the int8 table is down
-    val tmp = graft.util.Scratch.path("ivfsqlists", dir)
-    val marker = new java.io.File(s"$tmp/_GRAFT_INDEX_COMPLETE")
-    if (!marker.exists()) {
-      spark.read.schema(sq8Schema).parquet(s"${sq8ServePath(dir)}/qtable")
+    val (supers, groups, assigned) = ivf2Stored(spark, dir)
+    val tmp = StoredIndex.ensure(spark, dir, graft.util.Scratch.path("ivfsqlists", dir))(
+      sq8Stored(spark, dir)
         .join(assigned, "vec_id")
         .groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("q"), col("qn"))).as("entries"))
-        .write.mode("overwrite").parquet(tmp)
-      marker.createNewFile()
-    }
+        .write.mode("overwrite").parquet(_))
     val routing = supers.agg(collect_list(struct(col("sid"), col("sv"))).as("supers"))
       .crossJoin(groups.agg(collect_list(struct(col("cid"), col("cv"), col("sid"))).as("groups")))
     val lists = spark.read.schema(
@@ -3213,11 +2880,7 @@ object Similarity {
 
   private def kmeansAssign3Impl(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val dist = (0 until 64)
-      .map { d =>
-        val diff = element_at(col("v"), d + 1) - element_at(col("cv"), d + 1)
-        diff * diff
-      }.reduce(_ + _)
+    val dist = sqDist("v", "cv")
     // hash-agg packed argmin (see annIvfAssign); the update step's v is
     // re-attached by an n-row equi-join on vec_id AFTER the aggregate
     // rather than riding in the argmin buffer — min(struct(dist,cid,v))

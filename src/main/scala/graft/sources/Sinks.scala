@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -330,16 +331,30 @@ object Sinks {
       .parquet(path)
 
   /** K5 retention delete as a partition-level rewrite (plain-Parquet
-    * stand-in for Delta `DELETE WHERE` / partition drop). */
+    * stand-in for Delta `DELETE WHERE` / partition drop). The kept rows
+    * land beside the table, then the same two-rename swap as
+    * [[compactPartitioned]]: every failure point leaves a full copy on
+    * disk, and a filesystem op that reports failure raises. */
   def applyRetention(spark: SparkSession, path: String, cutoff: String): Unit = {
     val kept = spark.read.parquet(path).filter(col("date") >= lit(cutoff))
-    val tmp = path + "_retained"
+    val tmp = new Path(path + "_retained")
+    val old = new Path(path + "_expired")
     kept.write.mode(SaveMode.Overwrite).partitionBy("date")
-      .option("compression", "zstd").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
+      .option("compression", "zstd").parquet(tmp.toString)
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    swap(fs, new Path(path), tmp, old)
+  }
+
+  /** Replace `live` by `fresh`, keeping `live`'s data at `old` until
+    * `fresh` is in place: a crash after the first rename leaves the
+    * data recoverable from `old`. Each rename and delete must report
+    * success; a `false` raises instead of going on to drop the only
+    * copy. */
+  private def swap(fs: FileSystem, live: Path, fresh: Path, old: Path): Unit = {
+    if (fs.exists(old)) require(fs.delete(old, true), s"swap: stale $old not removed")
+    require(fs.rename(live, old), s"swap: rename $live -> $old failed")
+    require(fs.rename(fresh, live), s"swap: rename $fresh -> $live failed; data kept at $old")
+    require(fs.delete(old, true), s"swap: $old not removed")
   }
 
   /** K7 — JSON export of a small result (reports/params). */
@@ -358,9 +373,7 @@ object Sinks {
     * (date, files_before, files_after, bytes) census. */
   def compactPartitioned(spark: SparkSession, path: String,
                          targetBytes: Long = 128L << 20): Seq[(String, Int, Int, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(new Path(path)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
       .map { p =>
@@ -382,10 +395,7 @@ object Sinks {
           // recoverable from .compact_old_<date>; delete-then-rename
           // would lose it). The old copy is dropped only once the new
           // data is live.
-          fs.delete(old, true) // stale leftover from a prior crash
-          fs.rename(p.getPath, old)
-          fs.rename(tmp, p.getPath)
-          fs.delete(old, true)
+          swap(fs, p.getPath, tmp, old)
           (date, files.length, want, bytes)
         } else (date, files.length, files.length, bytes)
       }

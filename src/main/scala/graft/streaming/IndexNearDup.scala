@@ -62,16 +62,8 @@ object IndexNearDup {
   def nearDupAgainst(arrivals: DataFrame, routing: DataFrame,
       lists: DataFrame, tau: Double): DataFrame = {
     val gdot = graft.functions.GraftFunctions.dot _
-    // (1) arrival-side SQ8 quantization — keep bit-identical to
-    // Similarity.sq8Corpus (clamp closes floor's 1-ulp hazard at the
-    // max-|x| dim; all-zero vector quantizes to all-zero, qn 0)
-    val quantized = arrivals
-      .withColumn("ma", array_max(transform(col("v"), x => abs(x))))
-      .withColumn("aq", when(col("ma") > 0,
-          transform(col("v"), x => greatest(lit(-127.0),
-            least(lit(127.0), floor(x * lit(127.0) / col("ma")).cast("double")))))
-        .otherwise(transform(col("v"), _ => lit(0.0))))
-      .withColumn("aqn", sqrt(gdot(col("aq"), col("aq"))))
+    // (1) arrival-side SQ8 quantization — the stored lists' quantizer
+    val quantized = graft.scale.Similarity.sq8Quantize(arrivals, "aq", "aqn")
     // (2) two-level routing as array folds: best-2 supers by sqdist,
     // then best-2 lists among the probed supers' groups — the same
     // (dist, id) lexicographic tie-break as the batch ivf2Probes

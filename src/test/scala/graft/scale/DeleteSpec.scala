@@ -17,7 +17,7 @@ class DeleteSpec extends SparkSpec {
       .map(f => f.getName -> (f.length(), f.lastModified())).toMap
 
   test("COW delete rewrites only dirty files; clean files are untouched; re-apply is a no-op") {
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(Similarity.ivf2Stored(spark, sfDir)._3, "ivf2del", sfDir)
     val n = Similarity.corpusCount(spark, sfDir)
     val cutoff = n / 20L
     assert(cutoff > 0, s"fixture must be big enough to delete something (n=$n)")
@@ -26,7 +26,7 @@ class DeleteSpec extends SparkSpec {
 
     val before = snapshot(src)
     assert(before.size == 8, s"range-clustered stage must be 8 files, got ${before.size}")
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
+    StoredIndex.delete(spark, src, Similarity.ivf2AssignSchema, StoredIndex.Where(col("vec_id") < cutoff))
     val after = snapshot(src)
 
     val untouched = before.keySet.intersect(after.keySet)
@@ -56,7 +56,7 @@ class DeleteSpec extends SparkSpec {
 
     // idempotence: nothing below the cutoff remains, so a second apply
     // must touch no files at all
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
+    StoredIndex.delete(spark, src, Similarity.ivf2AssignSchema, StoredIndex.Where(col("vec_id") < cutoff))
     assert(snapshot(src) == after, "re-applying the same delete must be a pure no-op")
 
     graft.util.Scratch.cleanupPath(src)
@@ -64,7 +64,7 @@ class DeleteSpec extends SparkSpec {
 
   test("crash windows: pre-commit kill serves the pre-delete table; post-commit kill rolls forward") {
     import org.apache.hadoop.fs.Path
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(Similarity.ivf2Stored(spark, sfDir)._3, "ivf2del", sfDir)
     val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val n = Similarity.corpusCount(spark, sfDir)
     val cutoff = n / 20L
@@ -75,7 +75,7 @@ class DeleteSpec extends SparkSpec {
     val orphan = new java.io.File(src + ".rewrite")
     orphan.mkdirs()
     new java.io.FileWriter(new java.io.File(orphan, "part-orphan")) { write("x"); close() }
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.recover(spark, src)
     assert(spark.read.parquet(src).count() == n,
       "no-marker state must serve the pre-delete table")
     assert(orphan.exists(), "recover without a marker must not touch the stage dir")
@@ -85,9 +85,9 @@ class DeleteSpec extends SparkSpec {
     // stages survivors + commits the journal; simulate an interrupted
     // recover by replaying its first op for ONE journal entry of each
     // kind, then killing — the re-run must complete the identical swap.
-    assert(Similarity.ivf2DeletePrepare(spark, src, cutoff),
+    assert(StoredIndex.prepare(spark, src, Similarity.ivf2AssignSchema, StoredIndex.Where(col("vec_id") < cutoff)),
       "fixture must have dirty files to stage")
-    val marker = Similarity.ivf2SwapMarker(src)
+    val marker = StoredIndex.swapMarker(src)
     assert(fs.exists(marker), "prepare must leave the committed journal")
     val journal = scala.io.Source.fromFile(
       new java.io.File(new java.net.URI(marker.toString).getPath)).getLines().toList
@@ -98,7 +98,7 @@ class DeleteSpec extends SparkSpec {
     assert(fs.rename(new Path(renames.head(1)), new Path(src, renames.head(2))))
     assert(fs.delete(new Path(drops.head(1)), false))
     // the "restart": roll forward from the journal
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.recover(spark, src)
     assert(!fs.exists(marker), "recover must clear the journal")
     assert(!new java.io.File(src + ".rewrite").exists(), "recover must clear the stage dir")
     val got = spark.read.parquet(src)
@@ -106,7 +106,7 @@ class DeleteSpec extends SparkSpec {
     assert(got.agg(min(col("vec_id"))).head.getLong(0) == cutoff,
       "post-recovery table must be exactly the post-delete state")
     // and a recover with no marker stays a no-op
-    Similarity.ivf2DeleteRecover(spark, src)
+    StoredIndex.recover(spark, src)
     assert(spark.read.parquet(src).count() == n - cutoff)
     graft.util.Scratch.cleanupPath(src)
   }
@@ -115,7 +115,7 @@ class DeleteSpec extends SparkSpec {
     // the IO-level pruning claim: on the range-clustered layout the
     // census read must reach the scan as a pushed filter (row-group
     // stats then skip clean files' groups entirely)
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(Similarity.ivf2Stored(spark, sfDir)._3, "ivf2del", sfDir)
     val plan = spark.read.schema("vec_id BIGINT, cid BIGINT, d DOUBLE").parquet(src)
       .filter(col("vec_id") < 25L)
       .select(col("_metadata.file_path")).distinct()

@@ -19,9 +19,16 @@ class MorDeleteSpec extends SparkSpec {
       .filter(_.getName.startsWith("part-"))
       .map(f => f.getName -> (f.length(), f.lastModified())).toMap
 
+  test("the scattered purge spares every query id (0-9)") {
+    // the composed-delete oracle's q8 CTE is unpurged while Spark's
+    // quantized queries come from the purged qtable: equal only while
+    // no query id is doomed
+    assert(spark.range(10).withColumnRenamed("id", "vec_id")
+      .filter(Similarity.ivfSqDoomed).isEmpty)
+  }
+
   test("MOR delete rewrites ZERO data files: both censuses byte-identical, sidecar tiny") {
-    val asg = Similarity.ivf2DeleteStage(spark, sfDir, "morspecA")
-    val qt = Similarity.sq8DeleteStage(spark, sfDir, "morspecQ")
+    val (asg, qt) = Similarity.ivfSqStage(spark, sfDir, "morspec")
     val (a0, q0) = (census(asg), census(qt))
     assert(a0.nonEmpty && q0.nonEmpty, "staging must land files")
     val tomb = Similarity.ivfSqMorTombstones(spark, sfDir, asg, "morspecT")
@@ -57,14 +64,13 @@ class MorDeleteSpec extends SparkSpec {
   }
 
   test("fold applies tombstones through the keyed COW kernel and retires the sidecar") {
-    val asg = Similarity.ivf2DeleteStage(spark, sfDir, "foldspecA")
-    val qt = Similarity.sq8DeleteStage(spark, sfDir, "foldspecQ")
+    val (asg, qt) = Similarity.ivfSqStage(spark, sfDir, "foldspec")
     val tomb = Similarity.ivfSqMorTombstones(spark, sfDir, asg, "foldspecT")
     val nDoomed = spark.read.schema("vec_id BIGINT").parquet(tomb).count()
     assert(nDoomed > 0, "the fixture purge set must be non-empty")
     val keys = spark.read.schema("vec_id BIGINT").parquet(tomb)
-    Similarity.cowDeleteApplyKeys(spark, asg, Similarity.ivf2AssignSchema, keys)
-    Similarity.cowDeleteApplyKeys(spark, qt, Similarity.sq8Schema, keys)
+    StoredIndex.delete(spark, asg, Similarity.ivf2AssignSchema, StoredIndex.Keys(keys))
+    StoredIndex.delete(spark, qt, Similarity.sq8Schema, StoredIndex.Keys(keys))
     graft.util.Scratch.cleanupPath(tomb)
     // physical: the doomed bytes are genuinely gone from both halves
     val asgRows = spark.read.schema(Similarity.ivf2AssignSchema).parquet(asg)

@@ -18,12 +18,12 @@ class RebuildSpec extends SparkSpec {
 
     // refusing to cut over to a generation that was never built
     intercept[IllegalArgumentException] {
-      Similarity.ivf2RebuildCutover(root, "gen-ghost")
+      Similarity.ivf2RebuildCutover(spark, sfDir, root, "gen-ghost")
     }
 
     // day-0: index over the first 10% only, live after its cutover
-    Similarity.ivf2RebuildAside(spark, root, "gen-0", c.filter(col("vec_id") < cut), cut)
-    Similarity.ivf2RebuildCutover(root, "gen-0")
+    Similarity.ivf2RebuildAside(spark, sfDir, root, "gen-0", c.filter(col("vec_id") < cut), cut)
+    Similarity.ivf2RebuildCutover(spark, sfDir, root, "gen-0")
     assert(Similarity.ivf2CurrentGen(root).contains("gen-0"))
     val day0 = Similarity.ivf2GenServeRead(spark, sfDir, root)
     assert(day0.filter(col("neighbor_id") >= cut).isEmpty,
@@ -34,7 +34,7 @@ class RebuildSpec extends SparkSpec {
     // names gen-0, and a serve in this window returns day-0 results
     // (this is the claim that makes the rebuild online: no reader ever
     // sees a partial or half-adopted index)
-    Similarity.ivf2RebuildAside(spark, root, "gen-1", c, n)
+    Similarity.ivf2RebuildAside(spark, sfDir, root, "gen-1", c, n)
     assert(Similarity.ivf2CurrentGen(root).contains("gen-0"),
       "building aside must not move the pointer")
     val preFlip = Similarity.ivf2GenServeRead(spark, sfDir, root)
@@ -42,7 +42,7 @@ class RebuildSpec extends SparkSpec {
       "a serve between build-aside and cutover must still return day-0 results")
 
     // flip: the same read path now returns the fresh-build search
-    Similarity.ivf2RebuildCutover(root, "gen-1")
+    Similarity.ivf2RebuildCutover(spark, sfDir, root, "gen-1")
     val rebuilt = Similarity.ivf2GenServeRead(spark, sfDir, root)
     val fresh = Similarity.annIvf2Search(spark, sfDir)
     assert(rebuilt.exceptAll(fresh).isEmpty && fresh.exceptAll(rebuilt).isEmpty,

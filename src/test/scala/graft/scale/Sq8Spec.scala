@@ -114,14 +114,15 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("append is a pure file add: day-0 files byte-identical, read-back = full-build search") {
-    val tmp = Similarity.sq8AppendDay0(spark, sfDir)
+    val tmp = StoredIndex.writeDay0(spark, sfDir, Similarity.sq8QTable(spark, sfDir),
+      graft.util.Scratch.path("sq8append", sfDir))
     def snapshot(): Map[String, (Long, Long)] =
       Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-"))
         .map(f => f.getName -> (f.length(), f.lastModified())).toMap
     val day0 = snapshot()
     assert(day0.nonEmpty, "day-0 build must land files")
-    Similarity.sq8AppendBatch(spark, sfDir, tmp)
+    StoredIndex.appendBatch(spark, sfDir, Similarity.sq8QTable(spark, sfDir), tmp)
     val after = snapshot()
     // no-rewrite contract: every day-0 part survives the append with
     // identical length and mtime; the batch only ADDS files
@@ -153,9 +154,9 @@ class Sq8Spec extends SparkSpec {
   }
 
   test("corpus delete: a deleted vec_id's int8 row is gone and can never be served") {
-    val src = Similarity.sq8DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(Similarity.sq8Stored(spark, sfDir), "sq8del", sfDir)
     val cutoff = Similarity.corpusCount(spark, sfDir) / 20L
-    Similarity.ivf2DeleteApply(spark, src, cutoff, Similarity.sq8Schema)
+    StoredIndex.delete(spark, src, Similarity.sq8Schema, StoredIndex.Where(col("vec_id") < cutoff))
     val survivors = spark.read.schema(Similarity.sq8Schema).parquet(src)
     assert(survivors.filter(col("vec_id") < cutoff).isEmpty,
       "no doomed int8 row may survive the COW swap")
@@ -171,9 +172,10 @@ class Sq8Spec extends SparkSpec {
     // enough to keep the deleted ids out of served results — the
     // contract annIvfSqServe's scaladoc pins for the window between the
     // routing delete landing and the corpus delete landing
-    val src = Similarity.ivf2DeleteStage(spark, sfDir)
+    val src = StoredIndex.stage(Similarity.ivf2Stored(spark, sfDir)._3, "ivf2del", sfDir)
     val cutoff = Similarity.corpusCount(spark, sfDir) / 20L
-    Similarity.ivf2DeleteApply(spark, src, cutoff)
+    StoredIndex.delete(spark, src, Similarity.ivf2AssignSchema,
+      StoredIndex.Where(col("vec_id") < cutoff))
     val assigned = spark.read
       .schema("vec_id BIGINT, cid BIGINT, d DOUBLE").parquet(src)
       .select(col("vec_id"), col("cid"))

@@ -119,6 +119,28 @@ class SinksSpec extends SparkSpec {
     assert(math.abs(after.select(sum(col("value"))).head().getDouble(0) - sumBefore) < 1e-6)
   }
 
+  test("a rename the filesystem refuses raises and leaves every row readable") {
+    // the swap's renames go through a filesystem that refuses them (Spark's
+    // own commit renames under _temporary still work); before the checks a
+    // refused partition swap was followed by a delete of the only copy
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nomove.impl", classOf[SinksSpec.RefuseRenameFs].getName)
+    conf.setBoolean("fs.nomove.impl.disable.cache", true)
+    val local = graft.util.Scratch.register(Files.createTempDirectory("graft_refuse").toString)
+    val dir = s"nomove://$local/events"
+    val src = Tables.events(spark, sfDir).select(col("ts"), col("user_id"), col("value"))
+    Sinks.writePartitioned(src.repartition(20), dir)
+    val n = spark.read.parquet(dir).count()
+    val days = spark.read.parquet(dir).select(countDistinct(col("date"))).head().getLong(0)
+    val refused = Seq(
+      intercept[IllegalArgumentException](Sinks.compactPartitioned(spark, dir, targetBytes = 1L << 30)),
+      intercept[IllegalArgumentException](Sinks.applyRetention(spark, dir, "2024-01-05")))
+    refused.foreach(e => assert(e.getMessage.contains("swap: rename"), e.getMessage))
+    val after = spark.read.parquet(dir)
+    assert(after.count() == n, "every row must still be readable at the table path")
+    assert(after.select(countDistinct(col("date"))).head().getLong(0) == days)
+  }
+
   test("k1_merge_cow is genuinely copy-on-write: untouched date partitions keep their pass-1 files") {
     val out = Sinks.k1MergeCow(spark, sfDir)
     val rows = out.collect()
@@ -175,5 +197,15 @@ class SinksSpec extends SparkSpec {
     // executed AQE plan into later suites' explains (PlanAuditSpec saw
     // final+initial plans double-counted)
     manifest.unpersist()
+  }
+}
+
+object SinksSpec {
+  /** The local filesystem under the `nomove` scheme, refusing every
+    * rename outside a Spark job's `_temporary` commit dir. */
+  class RefuseRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("nomove:///")
+    override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+      src.toString.contains("_temporary") && super.rename(src, dst)
   }
 }
